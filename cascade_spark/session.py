@@ -17,24 +17,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Scan-split sizing: the 4 MiB openCostInBytes default floors
+# maxSplitBytes, so the ~10 MiB local fixture tables plan ~3 scan tasks
+# even on 32 threads. A 1 MiB override was A/B benched (full 345-query
+# run each way): 319.9 s vs 320.2 s — a wash, inside host noise, because
+# per-query cost here is dominated by session/shuffle fixed costs, not
+# scan CPU. The default is KEPT: at 100 TB files are ≥128 MiB and a
+# higher open cost correctly coalesces small-file scans.
+OPEN_COST_BYTES = 4 * 1024 * 1024
+MIN_SHUFFLE_PARTITIONS = 4
 
-def get_spark(
-    app_name: str = "cascade_spark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+
+def get_spark(app_name: str = "cascade_spark", cores: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("CASCADE_SHUFFLE_PARTITIONS", str(max(cores, 4)))
-    )
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, MIN_SHUFFLE_PARTITIONS)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -46,19 +49,7 @@ def get_spark(
         # so unix_micros/watermarks resolve; identity under UTC session tz).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Scan-split sizing: the 4 MiB openCostInBytes default floors
-        # maxSplitBytes, so the ~10 MiB local fixture tables plan ~3
-        # scan tasks even on 32 threads. A 1 MiB override was A/B
-        # benched in round 6 (full 345-query run each way): 319.9 s vs
-        # 320.2 s — a wash, inside host noise, because per-query cost
-        # here is dominated by session/shuffle fixed costs, not scan
-        # CPU. The default is KEPT: at 100 TB files are ≥128 MiB and a
-        # higher open cost correctly coalesces small-file scans.
-        # CASCADE_OPEN_COST overrides for experiments (see SCALE.md).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("CASCADE_OPEN_COST", str(4 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.openCostInBytes", str(OPEN_COST_BYTES))
         .config("spark.driver.memory", os.environ.get("CASCADE_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # ANSI off: declared queries rely on permissive casts matching

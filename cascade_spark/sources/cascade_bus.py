@@ -14,9 +14,11 @@ Reference semantics modeled (file:line):
 - **Append-only per-partition log + offset index, offset-tracked reads**
   — the broker appends each event to its log and records its position in
   an 8-byte-per-entry index (src/broker/main.rs:91-98); consumers seek
-  ``index[offset] .. index[offset+1]`` (src/broker/main.rs:123-160). Here
-  each partition is a JSON-lines log whose line number IS the offset;
-  reads are ``[start, end)`` line ranges.
+  ``index[offset] .. index[offset+1]`` (src/broker/main.rs:123-160).
+  Here ``index.json`` is a topic's only offset record: per partition a
+  chain of committed segments (producer JSON-lines logs, sink parquet
+  files) with row counts; reads are ``[start, end)`` ranges over it. No
+  index means an empty topic.
 
 Spark-side design: the connector is a **Python Data Source**
 (pyspark.sql.datasource) registered as ``cascade_bus``:
@@ -67,6 +69,7 @@ from pyspark.sql.datasource import (
     GreaterThan,
     GreaterThanOrEqual,
     InputPartition,
+    IsNotNull,
     LessThan,
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
@@ -128,8 +131,10 @@ class RingBuffer:
 
 
 class BusProducer:
-    """Publishes records through ring-buffer admission into per-partition
-    append-only JSON-lines logs with dense per-partition offsets."""
+    """Publishes records through ring-buffer admission into one
+    append-only JSON-lines log per partition (``p{k}.jsonl``) with dense
+    per-partition offsets, committed through ``index.json``. A topic has
+    one writer: the producer owns its index."""
 
     def __init__(self, topic_dir: str, num_partitions: int = 4, capacity: int = 1000):
         self.topic_dir = topic_dir
@@ -137,19 +142,14 @@ class BusProducer:
         self.ring = RingBuffer(capacity)
         self.rejected = 0
         os.makedirs(topic_dir, exist_ok=True)
-        # resume points: global round-robin sequence + per-partition offsets
-        self._next_offset = [self._log_len(p) for p in range(num_partitions)]
-        self._seq = sum(self._next_offset)
-
-    def _log_path(self, p: int) -> str:
-        return os.path.join(self.topic_dir, f"p{p}.jsonl")
-
-    def _log_len(self, p: int) -> int:
-        path = self._log_path(p)
-        if not os.path.exists(path):
-            return 0
-        with open(path) as fh:
-            return sum(1 for _ in fh)
+        # resume point: the committed index, never the log files
+        self._index = _load_index(topic_dir) or _new_index(num_partitions)
+        chains = self._index["segments"]
+        if self._index["num_partitions"] != num_partitions or any(
+            seg["fmt"] != "jsonl" for chain in chains.values() for seg in chain
+        ):
+            raise ValueError(f"{topic_dir} is not a {num_partitions}-partition producer topic")
+        self._seq = sum(seg["n"] for chain in chains.values() for seg in chain)
 
     def publish(self, records) -> int:
         """Admit records through the ring buffer; returns the accepted
@@ -164,23 +164,30 @@ class BusProducer:
 
     def flush(self) -> int:
         """Drain the ring and append to the partition logs: global seq i
-        → partition i % P (round robin), offset = lines already in that
-        partition's log (the broker's index-table position)."""
+        → partition i % P (round robin), offset = rows already committed
+        to that partition. Each log is first cut back to its committed
+        length (dropping a torn tail), then appended to; the index commit
+        after all appends makes the flush visible atomically."""
         batch = self.ring.drain()
-        handles = {}
-        try:
-            for rec in batch:
-                p = self._seq % self.num_partitions
-                if p not in handles:
-                    handles[p] = open(self._log_path(p), "a")
-                row = {"offset": self._next_offset[p]}
-                row.update(rec)
-                handles[p].write(json.dumps(row) + "\n")
-                self._next_offset[p] += 1
-                self._seq += 1
-        finally:
-            for fh in handles.values():
-                fh.close()
+        if not batch:
+            return 0
+        n_parts = self.num_partitions
+        for p in range(n_parts):
+            part = batch[(p - self._seq) % n_parts :: n_parts]
+            if not part:
+                continue
+            chain = self._index["segments"][str(p)]
+            if not chain:
+                chain.append({"file": f"p{p}.jsonl", "n": 0, "bytes": 0, "fmt": "jsonl"})
+            seg = chain[0]
+            data = "".join(json.dumps(rec) + "\n" for rec in part).encode()
+            with open(os.path.join(self.topic_dir, seg["file"]), "ab") as fh:
+                fh.truncate(seg["bytes"])
+                fh.write(data)
+            seg["n"] += len(part)
+            seg["bytes"] += len(data)
+        self._seq += len(batch)
+        _save_index(self.topic_dir, self._index)
         return len(batch)
 
     def publish_all(self, records, chunk: int | None = None) -> int:
@@ -196,12 +203,20 @@ class BusProducer:
         return total
 
 
+def _new_index(num_partitions: int) -> dict:
+    return {
+        "num_partitions": num_partitions,
+        "batches": [],
+        "segments": {str(p): [] for p in range(num_partitions)},
+    }
+
+
 def _load_index(topic_dir: str) -> dict | None:
     """The topic's committed-segment index — the broker's index.table
     analog (src/broker/main.rs:91-98): an ordered list of segments per
-    partition; a partition's offset space is the concatenation of its
-    committed segments. Producer-style topics (single p{k}.jsonl log per
-    partition) have no index and are handled as one implicit segment."""
+    partition, each ``{"file", "n", "fmt"}`` (plus ``"bytes"``, the
+    committed length, for a JSON-lines log); a partition's offset space
+    is the concatenation of its committed segments."""
     path = os.path.join(topic_dir, "index.json")
     if not os.path.exists(path):
         return None
@@ -218,68 +233,49 @@ def _save_index(topic_dir: str, idx: dict) -> None:
     os.replace(tmp, os.path.join(topic_dir, "index.json"))
 
 
-def _segment_files(topic_dir: str, p: int) -> list[tuple[str, int, str]]:
-    """[(absolute path, n_rows, format)] in committed offset order.
-    Sink-committed segments are columnar parquet; producer logs are the
-    reference-shaped JSON-lines append logs."""
+def _chains(topic_dir: str) -> dict[str, list[dict]]:
+    """One index snapshot: {partition: committed segment chain}."""
     idx = _load_index(topic_dir)
-    if idx is not None:
-        return [
-            (
-                os.path.join(topic_dir, "segments", seg["file"]),
-                seg["n"],
-                seg.get("fmt", "jsonl"),
-            )
-            for seg in idx["segments"].get(str(p), [])
-        ]
-    path = os.path.join(topic_dir, f"p{p}.jsonl")
-    if not os.path.exists(path):
-        return []
-    with open(path) as fh:
-        n = sum(1 for _ in fh)
-    return [(path, n, "jsonl")]
+    return idx["segments"] if idx else {}
 
 
-def _load_segment(path: str, fmt: str) -> pa.Table:
-    """One segment as an Arrow table of the 5 payload columns, in the
-    canonical types. JSONL parses through pyarrow's native C++ JSON
-    reader (no per-row Python), parquet is already columnar."""
-    if fmt == "parquet":
-        tbl = pq.read_table(path)
-    else:
+def _load_segment(topic_dir: str, seg: dict) -> pa.Table:
+    """One committed segment as an Arrow table of the 5 payload columns,
+    in the canonical types. A JSON-lines log parses only its committed
+    prefix through pyarrow's native C++ JSON reader (no per-row Python),
+    parquet is already columnar."""
+    if seg["fmt"] == "parquet":
+        tbl = pq.read_table(os.path.join(topic_dir, "segments", seg["file"]))
+    else:  # a producer log, at the topic root
         import pyarrow.json as pj
 
-        tbl = pj.read_json(path)
+        with open(os.path.join(topic_dir, seg["file"]), "rb") as fh:
+            tbl = pj.read_json(pa.BufferReader(fh.read(seg["bytes"])))
     return tbl.select(_FIELDS).cast(_PA_PAYLOAD)
 
 
-def _read_log_batches(topic_dir: str, p: int, start: int, end: int | None):
+def _read_log_batches(topic_dir: str, chain: list[dict], p: int, start: int, end: int | None):
     """Yield Arrow RecordBatches (full BUS_SCHEMA columns) for offsets
-    [start, end) of partition p — the broker's
+    [start, end) of partition p's segment chain — the broker's
     index[offset]..index[offset+1] seek, generalized to a committed-
     segment chain: whole segments are skipped by their row counts, the
     overlapping ones are loaded columnar and row-sliced."""
     base = 0
-    for path, n, fmt in _segment_files(topic_dir, p):
-        seg_end = base + n
-        if seg_end <= start or (end is not None and base >= end):
-            base = seg_end
-            continue
+    for seg in chain:
+        seg_end = base + seg["n"]
         lo = max(start, base)
         hi = seg_end if end is None else min(end, seg_end)
-        if hi <= lo:
-            base = seg_end
-            continue
-        payload = _load_segment(path, fmt).slice(lo - base, hi - lo)
-        full = pa.table(
-            {
-                "partition": pa.array(np.full(hi - lo, p, dtype=np.int32)),
-                "offset": pa.array(np.arange(lo, hi, dtype=np.int64)),
-                **{f: payload.column(f) for f in _FIELDS},
-            },
-            schema=_PA_FULL,
-        )
-        yield from full.to_batches()
+        if hi > lo:
+            payload = _load_segment(topic_dir, seg).slice(lo - base, hi - lo)
+            full = pa.table(
+                {
+                    "partition": pa.array(np.full(hi - lo, p, dtype=np.int32)),
+                    "offset": pa.array(np.arange(lo, hi, dtype=np.int64)),
+                    **{f: payload.column(f) for f in _FIELDS},
+                },
+                schema=_PA_FULL,
+            )
+            yield from full.to_batches()
         base = seg_end
 
 
@@ -293,28 +289,38 @@ def _batches_to_rows(batches) -> list[tuple]:
     return out
 
 
-def _num_partitions(topic_dir: str) -> int:
-    idx = _load_index(topic_dir)
-    if idx is not None:
-        return int(idx["num_partitions"])
-    return sum(
-        1 for f in os.listdir(topic_dir) if f.startswith("p") and f.endswith(".jsonl")
-    )
+def _log_ends(chains: dict[str, list[dict]]) -> dict[str, int]:
+    return {p: sum(seg["n"] for seg in chain) for p, chain in chains.items()}
 
 
 def _log_lens(topic_dir: str) -> dict[str, int]:
-    return {
-        str(p): sum(n for _, n, _ in _segment_files(topic_dir, p))
-        for p in range(_num_partitions(topic_dir))
-    }
+    return _log_ends(_chains(topic_dir))
+
+
+def _read_ranges(topic_dir: str, chains: dict, start: dict, end: dict) -> list:
+    return [
+        b
+        for p in sorted(end, key=int)
+        for b in _read_log_batches(topic_dir, chains.get(p, []), int(p), start.get(p, 0), end[p])
+    ]
+
+
+# offset predicate → the [lo, hi) offset range it admits (hi None = open)
+_OFFSET_RANGE = {
+    EqualTo: lambda v: (v, v + 1),
+    GreaterThan: lambda v: (v + 1, None),
+    GreaterThanOrEqual: lambda v: (v, None),
+    LessThan: lambda v: (0, v),
+    LessThanOrEqual: lambda v: (0, v + 1),
+}
 
 
 class BusBatchReader(DataSourceReader):
     """Parallel batch scan: one InputPartition per bus partition, rows
     transferred as Arrow RecordBatches. Supports **filter pushdown** on
     the two physical columns — ``partition`` equality prunes whole
-    partitions at planning time, ``offset`` range bounds become the
-    broker's index seek (src/broker/main.rs:123-160: consumers read
+    partitions at planning time, ``offset`` point and range bounds become
+    the broker's index seek (src/broker/main.rs:123-160: consumers read
     ``index[offset]..index[offset+1]`` instead of scanning the log)."""
 
     def __init__(self, options):
@@ -325,70 +331,65 @@ class BusBatchReader(DataSourceReader):
 
     def pushFilters(self, filters):
         for f in filters:
-            col = f.attribute
+            col = getattr(f, "attribute", None)  # Not(...) has none
             if isinstance(f, EqualTo) and col == ("partition",):
                 self.part_eq = int(f.value)
-            elif col == ("offset",) and isinstance(f, GreaterThanOrEqual):
-                self.off_lo = max(self.off_lo, int(f.value))
-            elif col == ("offset",) and isinstance(f, GreaterThan):
-                self.off_lo = max(self.off_lo, int(f.value) + 1)
-            elif col == ("offset",) and isinstance(f, LessThan):
-                v = int(f.value)
-                self.off_hi = v if self.off_hi is None else min(self.off_hi, v)
-            elif col == ("offset",) and isinstance(f, LessThanOrEqual):
-                v = int(f.value) + 1
-                self.off_hi = v if self.off_hi is None else min(self.off_hi, v)
+            elif col == ("offset",) and type(f) in _OFFSET_RANGE:
+                lo, hi = _OFFSET_RANGE[type(f)](int(f.value))
+                self.off_lo = max(self.off_lo, lo)
+                if hi is not None:
+                    self.off_hi = hi if self.off_hi is None else min(self.off_hi, hi)
+            elif isinstance(f, IsNotNull) and col in (("partition",), ("offset",)):
+                pass  # neither physical column is ever null
             else:
                 yield f  # not ours — Spark evaluates it post-scan
 
     def partitions(self):
-        n = _num_partitions(self.topic_dir)
         if self.part_eq is not None:
             # out-of-range partition still yields one (empty) split —
             # Spark requires a non-empty partition list
             return [InputPartition(self.part_eq)]
-        return [InputPartition(p) for p in range(n)]
+        return [InputPartition(p) for p in range(len(_chains(self.topic_dir)))]
 
     def read(self, partition):
+        chain = _chains(self.topic_dir).get(str(partition.value), [])
         yield from _read_log_batches(
-            self.topic_dir, partition.value, self.off_lo, self.off_hi
+            self.topic_dir, chain, partition.value, self.off_lo, self.off_hi
         )
 
 
 class BusStreamReader(SimpleDataSourceStreamReader):
-    """Per-partition offset-tracked micro-batch reads. ``maxRecordsPerBatch``
-    caps each micro-batch (admission control on the consume side), so a
-    backlog drains over several batches instead of one giant one."""
+    """Per-partition offset-tracked micro-batch reads over one index
+    snapshot per call. ``maxRecordsPerBatch`` caps each micro-batch
+    (admission control on the consume side). On a processing-time
+    trigger a backlog then drains over several batches; with
+    ``trigger(availableNow=True)`` the query stops after the first capped
+    batch. PySpark 4.1's ``PythonMicroBatchStream`` implements neither
+    ``SupportsTriggerAvailableNow`` nor ``SupportsAdmissionControl``, so
+    the reader cannot tell which trigger runs it."""
 
     def __init__(self, options):
         self.topic_dir = options["path"]
         self.max_per_batch = int(options.get("maxrecordsperbatch", 0)) or None
 
     def initialOffset(self) -> dict:
-        return {str(p): 0 for p in range(_num_partitions(self.topic_dir))}
+        return {p: 0 for p in _chains(self.topic_dir)}
 
     def read(self, start: dict):
-        ends = _log_lens(self.topic_dir)
-        end = {}
-        per_part = None
+        chains = _chains(self.topic_dir)
+        ends = _log_ends(chains)
         if self.max_per_batch:
-            per_part = max(1, self.max_per_batch // max(1, len(ends)))
-        for p, avail in ends.items():
-            lo = start.get(p, 0)
-            end[p] = min(avail, lo + per_part) if per_part else avail
+            cap = max(1, self.max_per_batch // max(1, len(ends)))
+            ends = {p: min(n, start.get(p, 0) + cap) for p, n in ends.items()}
         # iter(list), not a bare generator or list: the prefetch wrapper
         # copy.copy()s the cached iterator and next()s empty batches
-        return iter(self.readBetweenOffsets(start, end)), end
+        return iter(_read_ranges(self.topic_dir, chains, start, ends)), ends
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # materialized list of Arrow RecordBatches, not a generator — the
         # simple-reader wrapper prefetches on the driver and pickles the
         # batch to executors; Arrow keeps that transfer columnar
-        return [
-            b
-            for p in sorted(end, key=int)
-            for b in _read_log_batches(self.topic_dir, int(p), start.get(p, 0), end[p])
-        ]
+        return _read_ranges(self.topic_dir, _chains(self.topic_dir), start, end)
 
 
 @dataclass
@@ -438,11 +439,7 @@ class _BusWriterBase:
         return BusCommitMessage(entries=entries)
 
     def _commit(self, messages, batch_id: int | None = None) -> None:
-        idx = _load_index(self.topic_dir) or {
-            "num_partitions": self.num_partitions,
-            "batches": [],
-            "segments": {str(p): [] for p in range(self.num_partitions)},
-        }
+        idx = _load_index(self.topic_dir) or _new_index(self.num_partitions)
         if batch_id is not None and batch_id in idx["batches"]:
             # replayed micro-batch (restart after commit): drop the
             # duplicate segments — exactly-once
@@ -912,14 +909,12 @@ ORDER BY partition, segment_seq
 )
 def bus_index_dump(spark, sf_dir):
     topic = stage_bus_topic(spark, sf_dir)
-    idx = _load_index(topic)
-    n_parts = (idx or {}).get("num_partitions", 4)
     rows = []
-    for p in range(n_parts):
+    for p, chain in _chains(topic).items():
         base = 0
-        for seq, (path, n, fmt) in enumerate(_segment_files(topic, p)):
-            rows.append((p, seq, fmt, n, base, base + n))
-            base += n
+        for seq, seg in enumerate(chain):
+            rows.append((int(p), seq, seg["fmt"], seg["n"], base, base + seg["n"]))
+            base += seg["n"]
     return spark.createDataFrame(
         rows,
         "partition int, segment_seq long, fmt string, n_rows long, "

@@ -6,6 +6,7 @@ from __future__ import annotations
 import uuid
 
 import pyarrow as pa
+import pytest
 
 from cascade_spark.sources.cascade_bus import (
     BusProducer,
@@ -70,6 +71,30 @@ def test_producer_resumes_offsets_across_instances(tmp_path):
         key=lambda r: r[2],
     )
     assert [r[2] for r in rows] == list(range(9))
+    for part, off, event_id, *_ in rows:
+        assert part == event_id % 2 and off == event_id // 2
+
+
+def test_torn_tail_is_neither_read_nor_resumed_from(tmp_path):
+    """Bytes past a log's committed length (a half-written line) are
+    invisible to readers, and a resumed producer cuts them off."""
+    import os
+
+    topic = str(tmp_path / "t")
+    mk = lambda i: {"event_id": i, "ts_us": 0, "user_id": 0, "event_type": "x", "value": 0.0}
+    BusProducer(topic, num_partitions=2).publish_all([mk(i) for i in range(10)])
+    with open(os.path.join(topic, "p0.jsonl"), "a") as fh:
+        fh.write('{"event_id": 10, "ts_us": 0, "us')
+    reader = BusStreamReader({"path": topic})
+    batches, ends = reader.read(reader.initialOffset())
+    assert sorted(r[2] for r in _batches_to_rows(batches)) == list(range(10))
+    assert ends == {"0": 5, "1": 5}
+    with pytest.raises(ValueError):  # the index fixes the partition count
+        BusProducer(topic, num_partitions=3)
+    BusProducer(topic, num_partitions=2).publish_all([mk(i) for i in range(10, 14)])
+    batches, ends = reader.read(reader.initialOffset())
+    rows = _batches_to_rows(batches)
+    assert sorted(r[2] for r in rows) == list(range(14)) and ends == {"0": 7, "1": 7}
     for part, off, event_id, *_ in rows:
         assert part == event_id % 2 and off == event_id // 2
 
@@ -227,7 +252,14 @@ def test_stream_sink_checkpoint_rerun_no_duplicates(spark, sf_dir):
 def test_batch_reader_filter_pushdown_prunes(tmp_path):
     """partition equality prunes splits at planning; offset bounds become
     the segment-chain row slice (the broker's index seek)."""
-    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, LessThan, StringContains
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThanOrEqual,
+        IsNotNull,
+        LessThan,
+        Not,
+        StringContains,
+    )
 
     from cascade_spark.sources.cascade_bus import BusBatchReader
 
@@ -254,6 +286,14 @@ def test_batch_reader_filter_pushdown_prunes(tmp_path):
     assert [(x[0], x[1]) for x in rows] == [(1, 2), (1, 3), (1, 4)]
     # event i → partition i % 3, offset i // 3
     assert [x[2] for x in rows] == [7, 10, 13]
+    # what Spark pushes for "offset = 4 AND partition <> 1": the point
+    # lookup is the range [4, 5) in every partition, and only the Not,
+    # which the reader does not absorb, is left to filter post-scan
+    r = BusBatchReader({"path": topic})
+    neq = Not(EqualTo(("partition",), 1))
+    assert list(r.pushFilters([IsNotNull(("offset",)), EqualTo(("offset",), 4), neq])) == [neq]
+    rows = [x for part in r.partitions() for x in _batches_to_rows(r.read(part))]
+    assert [(x[0], x[1], x[2]) for x in rows] == [(0, 4, 12), (1, 4, 13), (2, 4, 14)]
 
 
 def test_batch_reader_pushdown_end_to_end(spark, sf_dir):
